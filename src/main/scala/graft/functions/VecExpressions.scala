@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graft.{BitsDouble, DoubleBits, StringFingerprint, TextStats, VecBridge, VecDot, VecSqDist}
+import org.apache.spark.sql.graft.{BitsDouble, DoubleBits, Nearest2D, StringFingerprint, TextStats, VecBridge, VecDot, VecSqDist}
 
 /** Public Column API over the native codegen vector expressions
   * (org.apache.spark.sql.graft.VecDot / VecSqDist — see that file for
@@ -14,6 +14,11 @@ object VecFunctions {
 
   def vecSqDist(a: Column, b: Column): Column =
     VecBridge.column(VecSqDist(e(a), e(b)))
+
+  /** Index of the centroid nearest to (x, y), the lowest index on ties
+    * (see org.apache.spark.sql.graft.Nearest2D). */
+  def nearest2D(x: Column, y: Column, cx: Array[Double], cy: Array[Double]): Column =
+    VecBridge.column(Nearest2D(e(x), e(y), cx, cy))
 
   def vecNorm(a: Column): Column = {
     import org.apache.spark.sql.functions.sqrt

@@ -52,9 +52,11 @@ case class FitResult(
   * only the k-row centroid set is collected per superstep.
   *
   * 100 TB posture: per iteration the only data movement is (a) one scan of
-  * the cached points with a codegen'd argmin projection — no shuffle — and
-  * (b) a partial/final hash aggregate over k groups (k rows cross the
-  * wire per partition). Driver memory holds k centroids, never data.
+  * the cached points projected through the native nearest-centroid loop
+  * (`KMeansOps.assignLabel`) — no shuffle, and the same compiled class for
+  * every superstep — and (b) a partial/final hash aggregate over k groups
+  * (k rows cross the wire per partition). Driver memory holds k
+  * centroids, never data.
   */
 object KMeansFit {
 
@@ -80,9 +82,7 @@ object KMeansFit {
     *              oracle-parity arithmetic; plain double sums when false
     *              — the reference's own arithmetic, ~2x cheaper per row */
   def step(points: DataFrame, cents: Seq[Cent], exact: Boolean = true): Seq[Cent] = {
-    // label-only assignment: the recompute reads nothing but (cid, x, y),
-    // so the full assign's carried centroid coords / distance are dead
-    // work in the hot loop (KMeansOps.assignLabel doc)
+    // label-only assignment: the recompute reads nothing but (cid, x, y)
     val assigned = KMeansOps.assignLabel(points, cents)
     val next =
       if (exact) KMeansOps.recompute(assigned)

@@ -4,14 +4,18 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.VecFunctions.nearest2D
+
 /** A 2-D centroid (reference `Centroid extends Point`, KMeans.java:406-430 —
   * immutable here; the reference's in-place `Point.sum/div` mutation is a
   * Flink object-reuse idiom we deliberately do not replicate, SURVEY.md §4). */
 case class Cent(cid: Int, x: Double, y: Double)
 
-/** The single-Lloyd-step operator kernel as declarative DataFrame
-  * transforms. Every transform has an exact DuckDB-SQL twin (the
-  * `*Sql` builders) so the driver's oracle can hash-compare results.
+/** The single-Lloyd-step operator kernel as DataFrame transforms: one
+  * native nearest-centroid expression (`Nearest2D`, see [[assign]]) and
+  * declarative projections and aggregates around it. Every transform has
+  * an exact DuckDB-SQL twin (the `*Sql` builders) so the driver's oracle
+  * can hash-compare results.
   *
   * Determinism notes (these make hash-exact oracle matching possible):
   *  - all per-row arithmetic is IEEE double ops (`*`, `+`, `-`, `sqrt`)
@@ -38,46 +42,61 @@ object KMeansOps {
   // (lowest-cid) centroid (KMeans.java:281) → order by (sqdist, cid).
   // -----------------------------------------------------------------
 
-  /** Broadcast-argmin as a pure projection: the k centroids are folded
-    * into a `least(struct(sqdist, cid, cx, cy))` expression. ZERO shuffle,
-    * whole-stage-codegen'd, scales linearly with input — this is the
-    * 100 TB path for small k (the centroid set plays the role of the
-    * reference's broadcast variable, KMeans.java:159). */
+  /** Index of each point's nearest centroid in `byCid` order — the
+    * native [[graft.functions.VecFunctions.nearest2D]] loop, whose
+    * lowest-index tie-break is the lowest-cid one because the arrays
+    * are ordered by cid. */
+  private def nearest(byCid: Seq[Cent]): Column =
+    nearest2D(col("x"), col("y"), byCid.map(_.x).toArray, byCid.map(_.y).toArray)
+
+  /** The cid at index `i` of `byCid`. A typed literal holds non-null
+    * elements, so (with ANSI on, Spark's default) the lookup is
+    * non-nullable, like the cid it replaces: a join on it infers no
+    * `isnotnull` filter that would re-run the kernel below it. */
+  private def cidAt(byCid: Seq[Cent], i: Column): Column =
+    typedLit(byCid.map(_.cid).toArray).getItem(i)
+
+  /** Broadcast argmin as a pure projection: the nearest-centroid index,
+    * then the winner's cid and coordinates looked up in cid-ordered
+    * array literals and its distance recomputed as dx*dx + dy*dy, the
+    * [[sqDist]] arithmetic. ZERO shuffle, whole-stage-codegen'd, O(k)
+    * primitive work per point; the centroid set plays the role of the
+    * reference's broadcast variable (KMeans.java:159).
+    *
+    * Centroid values reach generated code only as referenced arrays, so
+    * every centroid set of every k shares one compiled class. That is
+    * also why dx and dy get a projection of their own: as one [[sqDist]]
+    * tree, `x - cx` and `y - cy` would each appear twice, and
+    * subexpression elimination emits repeated subtrees in the order of
+    * their hash codes, which here hash the centroid values. */
   def assign(points: DataFrame, cents: Seq[Cent]): DataFrame = {
     require(cents.nonEmpty, "assign: empty centroid set")
-    val cands = cents.map { c =>
-      struct(
-        sqDist(col("x"), col("y"), lit(c.x), lit(c.y)).as("sq"),
-        lit(c.cid).as("cid"), lit(c.x).as("cx"), lit(c.y).as("cy"))
-    }
-    val best = if (cands.size == 1) cands.head else least(cands: _*)
+    val byCid = cents.sortBy(_.cid)
+    val i = col("nearest")
+    val xs = typedLit(byCid.map(_.x).toArray)
+    val ys = typedLit(byCid.map(_.y).toArray)
+    val dx = col("dx"); val dy = col("dy")
     points
-      .withColumn("best", best)
-      .select(col("pid"), col("x"), col("y"),
-        col("best.cid").as("cid"), col("best.cx").as("cx"),
-        col("best.cy").as("cy"), col("best.sq").as("sqdist"))
+      .withColumn("nearest", nearest(byCid))
+      .select(col("pid"), col("x"), col("y"), i, cidAt(byCid, i).as("cid"),
+        (col("x") - xs.getItem(i)).as("dx"), (col("y") - ys.getItem(i)).as("dy"))
+      .select(col("pid"), col("x"), col("y"), col("cid"),
+        xs.getItem(i).as("cx"), ys.getItem(i).as("cy"), (dx * dx + dy * dy).as("sqdist"))
   }
 
   /** Label-only assignment for the fit loop: same argmin and tie-break
-    * as [[assign]], but the candidate structs carry only (sq, cid) and
-    * the output only (x, y, cid) — the mean recompute never reads the
-    * winning centroid's coordinates or the distance, so the full
-    * variant's extra 2 struct fields × k candidates per row are dead
-    * work in the hot loop (~15% of superstep cost at 10M points).
-    * The oracle surface keeps the full [[assign]]. */
+    * as [[assign]], output only (x, y, cid) — the mean recompute never
+    * reads the winning centroid's coordinates or the distance. The
+    * oracle surface keeps the full [[assign]]. */
   def assignLabel(points: DataFrame, cents: Seq[Cent]): DataFrame = {
     require(cents.nonEmpty, "assignLabel: empty centroid set")
-    val cands = cents.map { c =>
-      struct(
-        sqDist(col("x"), col("y"), lit(c.x), lit(c.y)).as("sq"),
-        lit(c.cid).as("cid"))
-    }
-    val best = if (cands.size == 1) cands.head else least(cands: _*)
-    points.select(col("x"), col("y"), best.getField("cid").as("cid"))
+    val byCid = cents.sortBy(_.cid)
+    points.select(col("x"), col("y"),
+      cidAt(byCid, nearest(byCid)).as("cid"))
   }
 
-  /** Broadcast-hash-join variant for larger k (centroids still fit in an
-    * executor but not in a codegen expression): crossJoin(broadcast) +
+  /** Broadcast-hash-join variant, the centroid set as a relation rather
+    * than driver-side arrays: crossJoin(broadcast) +
     * per-pid packed-argmin aggregate — one shuffle on pid, map-side
     * partial agg. Same (sqdist, cid) ordering semantics as `assign`.
     *
@@ -247,7 +266,7 @@ object KMeansOps {
   // the nearest OTHER centroid, s = (b−a)/max(a,b) — the standard
   // "how well-separated is this clustering" eval without the exact
   // silhouette's O(n²) pairwise matrix. One zero-shuffle scan (the
-  // argmin fold + a masked second-min fold in the same projection) and
+  // argmin + a masked second-min fold in the same projection) and
   // one k-row aggregate; per-cluster means run on the 1e-12 integer
   // grid so the irrational sqrt terms sum order-independently.
   // -----------------------------------------------------------------
@@ -299,7 +318,7 @@ object KMeansOps {
   // per-point md5-60 uniform), which makes the classic randomized init
   // a PURE FUNCTION of the data, reproducible in any engine. Each of
   // the k rounds is a zero-shuffle scan projection (current centers
-  // folded in as literals, like the production assign) feeding
+  // folded in as literals) feeding
   // TakeOrderedAndProject(1) — k passes over the data total. At 100 TB
   // you'd trade exactness for passes via k-means|| oversampling; this
   // is the exact sequential variant the oracle can replay (unrolled

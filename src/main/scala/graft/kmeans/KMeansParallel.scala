@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.PortableMath
+import graft.functions.VecFunctions.nearest2D
 
 /** k-means|| initialization (Bahmani, Moseley, Vattani, Kumar,
   * Vassilvitskii — "Scalable k-means++", VLDB 2012): the O(log n)-pass
@@ -41,11 +42,10 @@ import graft.functions.PortableMath
   *    (ANSI Spark raises on x/0; there is no division anywhere).
   *
   * Scale shape: per round ONE zero-shuffle scan computes d² against
-  * the ≤ 1+r·cap current centers folded in as literals (the broadcast-
-  * argmin idiom of [[KMeansOps.assign]]) feeding a 1-row decimal agg
-  * (map-side partials), then ONE filtered scan collects the ≤ cap
-  * acceptances. No point-sized relation ever shuffles; 2R+2 passes
-  * total regardless of n.
+  * the ≤ 1+r·cap current centers folded in as literals, feeding a
+  * 1-row decimal agg (map-side partials), then ONE filtered scan
+  * collects the ≤ cap acceptances. No point-sized relation ever
+  * shuffles; 2R+2 passes total regardless of n.
   */
 object KMeansParallel {
 
@@ -165,47 +165,23 @@ object KMeansParallel {
   }
 
   /** Candidate weights: w(c) = |{p : c = argmin d²(p, C)}| with the
-    * assign tie-break (lowest cidx wins) — ONE zero-shuffle argmin
-    * scan + one candidate-keyed count agg. Duplicate-coordinate
-    * candidates lose every tie to their lower-cidx twin and keep
-    * weight 0 (they are dropped by the final race's w=0 arm). */
+    * assign tie-break (lowest cidx wins) — ONE zero-shuffle scan
+    * through the native nearest-centroid loop (as in
+    * [[KMeansOps.assign]]) + one candidate-keyed count agg.
+    * Duplicate-coordinate candidates lose every tie to their lower-cidx
+    * twin and keep weight 0 (they are dropped by the final race's w=0
+    * arm). */
   def weighted(points: DataFrame, cands: Seq[Cand]): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
-    // Flat PRIMITIVE argmin, not least(struct(sq, cid)…): the
-    // candidate set here is 1+R·cap ≈ 50-100 entries, past the size
-    // where a least() over struct terms stays efficient (struct
-    // comparisons leave whole-stage codegen's primitive path —
-    // measured 11 s at sf0.1; the packed-DECIMAL crossJoin twin was no
-    // better at 12 s from 31M per-row Decimal allocations). This shape
-    // is three chained projections of doubles only: (1) each sq once,
-    // (2) m = least(sq…) — comparisons, no allocation, (3) cidx =
-    // first candidate (ascending) with sq = m. Identical semantics to
-    // the lexicographic (sq, cidx) min: m is bit-for-bit one of the sq
-    // values, sq is never -0.0 (products of same sign), and the CASE
-    // scans cidx ascending so ties keep the lowest cidx — the oracle's
-    // `ORDER BY d2, cidx LIMIT 1`. ~0.85 s at sf0.1 (13× faster),
-    // zero-shuffle until the |cands|-group count agg.
-    val sqCols = cands.map(c => KMeansOps.sqDist(
-      col("x"), col("y"), lit(c.x), lit(c.y)).as(s"sq${c.cidx}"))
     val byIdx = cands.sortBy(_.cidx)
-    val m =
-      if (byIdx.size == 1) col(s"sq${byIdx.head.cidx}")
-      else least(byIdx.map(c => col(s"sq${c.cidx}")): _*)
-    // The .otherwise(-1) is UNREACHABLE (m = least(sq…) is bit-for-bit
-    // one of the sq values, so some branch always fires — and the spec
-    // pins Σw = n, which a -1 leak would break) but load-bearing for
-    // the PLAN: without it the CASE is nullable, the left join infers
-    // `isNotNull(cidx)`, and InferFiltersFromConstraints pushes that
-    // predicate below the projections with m INLINED into all |cands|
-    // branches — a 41k-node Filter re-evaluating ~|cands|² distance
-    // terms per row (measured 5 s of the 6 s total at sf0.1).
-    val cidx = byIdx.tail.foldLeft(
-      when(col(s"sq${byIdx.head.cidx}") === col("m"), lit(byIdx.head.cidx))) {
-      (acc, c) => acc.when(col(s"sq${c.cidx}") === col("m"), lit(c.cidx))
-    }.otherwise(lit(-1))
-    val w = widened(points).select(sqCols: _*).withColumn("m", m)
-      .select(cidx.as("cidx"))
+    val nearest = nearest2D(col("x"), col("y"),
+      byIdx.map(_.x).toArray, byIdx.map(_.y).toArray)
+    // a typed literal keeps cidx non-nullable, so the left join below
+    // infers no isnotnull(cidx) filter that would re-run the kernel
+    // beneath the aggregate (KMeansOps.cidAt)
+    val w = widened(points)
+      .select(typedLit(byIdx.map(_.cidx).toArray).getItem(nearest).as("cidx"))
       .groupBy("cidx").agg(count(lit(1)).as("w"))
     cands.toDF("cidx", "rnd", "pid", "x", "y")
       .join(w, Seq("cidx"), "left")

@@ -1,11 +1,13 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for dense-vector math over
@@ -83,6 +85,82 @@ case class VecSqDist(left: Expression, right: Expression) extends VecBinaryExpre
   override def prettyName: String = "vec_sqdist"
   override protected def withNewChildrenInternal(l: Expression, r: Expression): VecSqDist =
     copy(left = l, right = r)
+}
+
+/** Index of the centroid nearest to the point (x, y) — the
+  * nearest-centroid kernel of the 2-D Lloyd step (the reference's
+  * ComputeCentroidsDistance loop, KMeans.java:264-290). `cx`/`cy` hold
+  * the centroid coordinates in tie-break order (the callers order them
+  * by cid); the lowest index wins a tie. Distances are `dx*dx + dy*dy`
+  * compared in Spark's double ordering, where NaN is the greatest value,
+  * so when every distance is NaN or +Inf — or x or y is null — index 0
+  * wins: the pick a `least(struct(sqdist, cid))` over the candidates
+  * makes. Never null.
+  *
+  * The arrays reach generated code through `addReferenceObj`, never as
+  * literals, so the generated source is the same for every centroid set
+  * of every k: one compile per plan shape, not one per Lloyd superstep. */
+case class Nearest2D(left: Expression, right: Expression,
+    cx: Array[Double], cy: Array[Double])
+  extends BinaryExpression with ExpectsInputTypes {
+  require(cx.nonEmpty && cx.length == cy.length,
+    "Nearest2D: needs one (cx, cy) pair per centroid, at least one")
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType, DoubleType)
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = false
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(left, right, s"k=${cx.length}")
+
+  override def eval(input: InternalRow): Any = {
+    val x = left.eval(input)
+    val y = right.eval(input)
+    if (x == null || y == null) 0
+    else Nearest2D.nearest(x.asInstanceOf[Double], y.asInstanceOf[Double], cx, cy)
+  }
+
+  // not nullSafeCodeGen: a null coordinate must yield index 0, not null
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val x = left.genCode(ctx)
+    val y = right.genCode(ctx)
+    val cxRef = ctx.addReferenceObj("cx", cx, "double[]")
+    val cyRef = ctx.addReferenceObj("cy", cy, "double[]")
+    ev.copy(code = code"""
+      |${x.code}
+      |${y.code}
+      |int ${ev.value} = 0;
+      |if (!${x.isNull} && !${y.isNull}) {
+      |  ${ev.value} = org.apache.spark.sql.graft.Nearest2D.nearest(
+      |    ${x.value}, ${y.value}, $cxRef, $cyRef);
+      |}""".stripMargin, isNull = FalseLiteral)
+  }
+
+  override def prettyName: String = "nearest2d"
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Nearest2D =
+    copy(left = l, right = r)
+}
+
+object Nearest2D {
+  /** Shared by interpreted eval and the codegen'd Java. */
+  def nearest(x: Double, y: Double, cx: Array[Double], cy: Array[Double]): Int = {
+    var dx = x - cx(0)
+    var dy = y - cy(0)
+    var bestSq = dx * dx + dy * dy
+    var best = 0
+    var i = 1
+    while (i < cx.length) {
+      dx = x - cx(i)
+      dy = y - cy(i)
+      val sq = dx * dx + dy * dy
+      // strictly less in Spark's ordering: a number beats NaN, NaN beats nothing
+      if (sq < bestSq || (java.lang.Double.isNaN(bestSq) && !java.lang.Double.isNaN(sq))) {
+        bestSq = sq
+        best = i
+      }
+      i += 1
+    }
+    best
+  }
 }
 
 /** Raw IEEE-754 bits of a double, as a long. For NON-NEGATIVE doubles

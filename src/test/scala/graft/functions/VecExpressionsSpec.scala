@@ -82,6 +82,28 @@ class VecExpressionsSpec extends SparkSpec {
     assert(!projected.queryExecution.executedPlan.toString.contains("CodegenFallback"))
   }
 
+  test("nearest2d picks what a least(struct(sq, index)) fold picks, NaN and ±Inf included") {
+    // coordinates from a set that makes NaN and infinite distances, for
+    // points and centroids alike; every centroid pair also ties somewhere
+    val vs = Seq(0.0, 1.0, -1.0, 2.5, Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity)
+    val cx = Array(1.0, Double.PositiveInfinity, -1.0, 1.0, Double.NaN, 0.0)
+    val cy = Array(0.0, 0.0, 0.0, 0.0, 0.0, Double.NegativeInfinity)
+    val local = (for (x <- vs; y <- vs) yield (x, y)).toDF("x", "y")
+    val fold = least(cx.indices.map { i =>
+      val dx = col("x") - lit(cx(i)); val dy = col("y") - lit(cy(i))
+      struct((dx * dx + dy * dy).as("sq"), lit(i).as("i"))
+    }: _*).getField("i")
+    // the local relation is evaluated by the optimizer (interpreted), the
+    // RDD-backed copy by generated code
+    Seq(local, spark.createDataFrame(local.rdd, local.schema)).foreach { d =>
+      val rows = d.select(VecFunctions.nearest2D(col("x"), col("y"), cx, cy), fold)
+        .as[(Int, Int)].collect()
+      assert(rows.length == vs.size * vs.size)
+      rows.foreach { case (got, want) => assert(got == want) }
+    }
+  }
+
   test("packed-decimal argmin key orders exactly like lexicographic (sq, cid)") {
     // the ordering identity underlying assignJoin / KMeansND.assign:
     // for non-negative doubles, doubleToRawLongBits is order-isomorphic

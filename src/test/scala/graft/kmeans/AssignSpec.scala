@@ -17,6 +17,78 @@ class AssignSpec extends SparkSpec {
     (4L, -7.0, 0.0)   // nearest cid 0
   ).toDF("pid", "x", "y")
 
+  // Edge semantics of the pick under Spark's double ordering (NaN is the
+  // greatest value). Centroids are listed out of cid order; a tie goes to
+  // the lowest cid, not the first listed. A null, NaN or +Inf coordinate
+  // ties every candidate, so it lands on the lowest cid and carries its
+  // null/NaN/+Inf distance. Columns: case, x, expected cid, expected sqdist.
+  private val edgeCents = Seq(Cent(5, 0.0, 0.0), Cent(2, 2.0, 0.0), Cent(9, -3.0, 0.0))
+  private val edgeCases: Seq[(String, Option[Double], Int, Option[Double])] = Seq(
+    ("exact tie, out of cid order", Some(1.0), 2, Some(1.0)),
+    ("null x", None, 2, None),
+    ("NaN x", Some(Double.NaN), 2, Some(Double.NaN)),
+    ("+Inf x", Some(Double.PositiveInfinity), 2, Some(Double.PositiveInfinity)))
+
+  private def sameDouble(a: Option[Double], b: Option[Double]): Boolean =
+    (a, b) match {
+      case (Some(p), Some(q)) => java.lang.Double.compare(p, q) == 0
+      case (None, None) => true
+      case _ => false
+    }
+
+  test("edge table: ties, null, NaN and +Inf coordinates pick the lowest cid") {
+    val nullable = edgeCases.zipWithIndex
+      .map { case ((_, x, _, _), i) => (i.toLong, x, 0.0) }.toDF("pid", "x", "y")
+    // the same rows once through a nullable x column, and each non-null
+    // row once more through a non-nullable one (the two input paths)
+    val local = nullable +: edgeCases.zipWithIndex.collect {
+      case ((_, Some(x), _, _), i) => Seq((i.toLong, x, 0.0)).toDF("pid", "x", "y")
+    }
+    // the optimizer evaluates a projection of a local relation itself
+    // (ConvertToLocalRelation); the RDD-backed copies run generated code,
+    // with no silent fallback to interpretation
+    val frames = local ++ local.map(df => spark.createDataFrame(df.rdd, df.schema))
+    val fallback = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try frames.foreach { df =>
+      val full = KMeansOps.assign(df, edgeCents).collect()
+        .map(r => r.getLong(0) -> r).toMap
+      val labels = KMeansOps.assignLabel(df, edgeCents)
+        .select("cid").as[Int].collect().toSeq
+      val rows = df.select("pid").as[Long].collect().toSeq
+      assert(labels == rows.map(p => edgeCases(p.toInt)._3))
+      rows.foreach { p =>
+        val (name, _, cid, sq) = edgeCases(p.toInt)
+        val r = full(p)
+        assert(r.getAs[Int]("cid") == cid, name)
+        assert(r.getAs[Double]("cx") == 2.0 && r.getAs[Double]("cy") == 0.0, name)
+        val got = if (r.isNullAt(r.fieldIndex("sqdist"))) None
+          else Some(r.getAs[Double]("sqdist"))
+        assert(sameDouble(got, sq), s"$name: sqdist $got, expected $sq")
+      }
+    } finally spark.conf.set("spark.sql.codegen.fallback", fallback)
+  }
+
+  test("a second centroid set compiles no new code (step and sse, k=128)") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.functions.col
+    // a generated relation, not a local one: its projections run as
+    // generated code (see the edge table)
+    val df = spark.range(0, 20000).select(col("id").as("pid"),
+      (col("id") % 97 * 0.21 - 10.0).as("x"), (col("id") % 89 * 0.23 - 10.0).as("y"))
+    def cents(seed: Int): Seq[Cent] = {
+      val r = new scala.util.Random(seed)
+      (0 until 128).map(c => Cent(c, r.nextDouble() * 20 - 10, r.nextDouble() * 20 - 10))
+    }
+    KMeansFit.step(df, cents(1))
+    KMeansFit.sse(df, cents(1))
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    KMeansFit.step(df, cents(2))
+    KMeansFit.sse(df, cents(2))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before == 0,
+      "centroid values reached the generated source")
+  }
+
   test("assign picks the nearest centroid") {
     val got = KMeansOps.assign(pts, cents)
       .select("pid", "cid").as[(Long, Int)].collect().toMap

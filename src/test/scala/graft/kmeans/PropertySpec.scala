@@ -45,6 +45,41 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("assign and assignLabel equal a brute-force argmin on tie-heavy grids, k up to 512") {
+    // half-integer grid coordinates: distances are exact and ties are
+    // everywhere; k > 289 grid cells forces duplicate centroids
+    val cell = Gen.choose(-8, 8).map(_ / 2.0)
+    val point = Gen.zip(cell, cell)
+    Seq(1, 2, 7, 64, 256, 512).zipWithIndex.foreach { case (k, s) =>
+      val gen = for {
+        pts <- Gen.listOfN(80, point)
+        at <- Gen.listOfN(k, point)
+        cids <- Gen.pick(k, 0 until 3 * k) // distinct, listed out of order
+      } yield (pts, cids.toList.zip(at).map { case (c, (x, y)) => Cent(c, x, y) })
+      val (pts, cents) = gen.apply(Gen.Parameters.default, Seed(100L + s)).get
+      val byCid = cents.sortBy(_.cid)
+      // the reference's loop: strictly less keeps the first, lowest cid
+      def brute(x: Double, y: Double): (Int, Double) =
+        byCid.map { c => val dx = x - c.x; val dy = y - c.y; (c.cid, dx * dx + dy * dy) }
+          .reduceLeft((a, b) => if (b._2 < a._2) b else a)
+      val df = pts.zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
+        .toDF("pid", "x", "y").repartition(3)
+      val got = KMeansOps.assign(df, cents)
+        .select("pid", "cid", "sqdist").as[(Long, Int, Double)].collect()
+      assert(got.length == pts.length)
+      got.foreach { case (pid, cid, sq) =>
+        val (x, y) = pts(pid.toInt)
+        val (bCid, bSq) = brute(x, y)
+        assert(cid == bCid && java.lang.Double.doubleToRawLongBits(sq) ==
+          java.lang.Double.doubleToRawLongBits(bSq), s"k=$k point ($x, $y)")
+      }
+      val labels = KMeansOps.assignLabel(df, cents)
+        .as[(Double, Double, Int)].collect().toSeq
+      assert(labels.sorted == pts.map { case (x, y) => (x, y, brute(x, y)._1) }.sorted,
+        s"k=$k labels")
+    }
+  }
+
   test("assignment is invariant to input order and partitioning") {
     samples(5).foreach { pts =>
       val cents = Seq(Cent(0, -10.0, -10.0), Cent(1, 10.0, 10.0))
